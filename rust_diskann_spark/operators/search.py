@@ -90,16 +90,21 @@ def _auto_probe_tau() -> float:
     return _AUTO_PROBE_TAU
 
 
-# RDS_PROFILE_DIR: when set, every broadcast_search worker appends one
-# JSON line per Arrow batch to <dir>/search_profile_<pid>.jsonl with a
-# per-component time budget (stack/route/kernel/flat/merge/df + wall).
-# The r7 verdict's measured ~2x full-path-vs-kernel gap at beam 512 is
-# Spark-mechanics overhead; this is the stopwatch that attributes it.
-# Timer reads always run (ns-scale next to ms-scale batches); file IO
-# only when enabled.
-_PROFILE_DIR = None
-
-
+# RDS_PROFILE_DIR: when set, search workers append JSON lines to
+# <dir>/search_profile_<pid>.jsonl. Two record kinds, one per task unit:
+#
+# - ``path="shard_task"``: one kernel call over one shard — source, t0,
+#   n_rows, n_q, decode, kernel, emit, wall (seconds; ``decode`` is the
+#   time from t0 to the kernel start). Written by every path, including
+#   once per (Arrow batch, probed shard) inside query-partition tasks.
+# - ``path="partition"``: one Arrow batch of a query-partition task
+#   (broadcast_search) — t0, n_q, n_shards, stack, route, kernel, flat,
+#   merge, df, wall.
+#
+# The directory is read on the driver at import and shipped to tasks in
+# the plan's closures, so a worker writes exactly when the plan that
+# launched it was built with profiling on. Timer reads always run
+# (ns-scale next to ms-scale batches); file IO only when enabled.
 def _read_profile_dir():
     import os
 
@@ -109,15 +114,35 @@ def _read_profile_dir():
 _PROFILE_DIR = _read_profile_dir()
 
 
-def _profile_emit(rec: dict) -> None:
+def _profile_emit(profile_dir: str, *recs: dict) -> None:
     import json
     import os
 
     path = os.path.join(
-        _PROFILE_DIR, f"search_profile_{os.getpid()}.jsonl"
+        profile_dir, f"search_profile_{os.getpid()}.jsonl"
     )
     with open(path, "a") as fh:
-        fh.write(json.dumps(rec) + "\n")
+        fh.write("".join(json.dumps(r) + "\n" for r in recs))
+
+
+def _shard_task_record(
+    source: str, t0: float, n_rows: int, n_q: int, t_decode: float,
+    t_kernel: float, t_end: float,
+) -> dict:
+    """The ``path="shard_task"`` profile record: one kernel call over one
+    shard, from perf_counter stamps taken at start, kernel start, kernel
+    end and emit end."""
+    return {
+        "path": "shard_task",
+        "source": source,
+        "t0": t0,
+        "n_rows": int(n_rows),
+        "n_q": int(n_q),
+        "decode": round(t_decode - t0, 6),
+        "kernel": round(t_kernel - t_decode, 6),
+        "emit": round(t_end - t_kernel, 6),
+        "wall": round(t_end - t0, 6),
+    }
 
 
 def _probe_mask(dmat: np.ndarray, shard_probes) -> np.ndarray | None:
@@ -263,10 +288,13 @@ def _search_decoded(
     beam_width: int,
     t0: float | None = None,
     source: str = "arrow",
+    profile_dir: str | None = None,
 ) -> pd.DataFrame:
     """Kernel + emit over an already-decoded shard tuple — shared by the
-    Arrow-decode path (:func:`_shard_search_pdf`) and the mmap cache path
-    (:func:`cached_scan_search`)."""
+    Arrow-decode path (:func:`_shard_search_pdf`) and the grouped mmap
+    cache path (:func:`grouped_scan_search`). ``t0`` starts this call's
+    profile window (its ``decode`` span); ``profile_dir`` enables the
+    ``shard_task`` record."""
     from time import perf_counter as _pc
 
     gids, mat, graph, medoid_local, sqn, ent, quant = tup
@@ -287,21 +315,11 @@ def _search_decoded(
         q_pdf["query_id"].to_numpy().astype(np.int64, copy=False), r_lens
     )
     out = pd.DataFrame({"query_id": out_q, "id": out_i, "dist": out_d})
-    if _PROFILE_DIR:
-        _t0 = t0 if t0 is not None else _t_decode
-        _profile_emit(
-            {
-                "path": "shard_task",
-                "source": source,
-                "t0": _t0,
-                "n_rows": int(len(gids)),
-                "n_q": int(len(q_pdf)),
-                "decode": round(_t_decode - _t0, 6),
-                "kernel": round(_t_kernel - _t_decode, 6),
-                "emit": round(_pc() - _t_kernel, 6),
-                "wall": round(_pc() - _t0, 6),
-            }
-        )
+    if profile_dir:
+        _profile_emit(profile_dir, _shard_task_record(
+            source, t0 if t0 is not None else _t_decode, len(gids),
+            len(q_pdf), _t_decode, _t_kernel, _pc(),
+        ))
     return out
 
 
@@ -313,6 +331,7 @@ def _shard_search_pdf(
     per_shard_k: int,
     beam_width: int,
     has_entries: bool,
+    profile_dir: str | None = None,
 ) -> pd.DataFrame:
     """One shard's beam search over one query batch (the executor-side
     kernel shared by the cogrouped and scan search paths): materialize the
@@ -349,6 +368,7 @@ def _shard_search_pdf(
     return _search_decoded(
         (gids, mat, graph, medoid_local, sqn, ent, quant),
         q_pdf, metric, dtype, per_shard_k, beam_width, t0=_t0,
+        profile_dir=profile_dir,
     )
 
 
@@ -402,10 +422,12 @@ def search(
 
     metric = params.metric
     dtype = np.int64 if metric == "hamming" else np.float32
+    profile_dir = _PROFILE_DIR
 
     def search_shard(index_pdf: pd.DataFrame, q_pdf: pd.DataFrame) -> pd.DataFrame:
         return _shard_search_pdf(
-            index_pdf, q_pdf, metric, dtype, per_shard_k, beam_width, has_entries
+            index_pdf, q_pdf, metric, dtype, per_shard_k, beam_width,
+            has_entries, profile_dir,
         )
 
     candidates = (
@@ -498,7 +520,7 @@ def _probe_map_from_routing(
 ) -> dict[int, np.ndarray] | None:
     """{shard: row positions of the queries probing it} from a routing
     dict, or None for scan-all — the driver-side half of probed scan
-    search, shared by the legacy and cached paths."""
+    search, shared by the legacy and grouped paths."""
     sids = sorted(routing)
     if not isinstance(shard_probes, str) and shard_probes >= len(sids):
         return None
@@ -553,91 +575,6 @@ def cached_scan_routing(
     for sid, grp in rows.groupby("shard"):
         out[int(sid)] = _stack_rows(grp["vec"], dtype)
     return out
-
-
-def cached_scan_search(
-    queries: DataFrame,
-    skeleton: DataFrame,
-    index_path: str,
-    token: str,
-    root: str,
-    params: IndexParams,
-    k: int,
-    beam_width: int = 64,
-    shard_probes: int | str | None = None,
-    routing=None,
-) -> DataFrame:
-    """:func:`scan_search` with residency moved from a JVM-persisted
-    corpus to the node-local mmap shard cache (operators/shard_cache.py).
-
-    The dispatch side is a SKELETON of shard ids — one int row per shard,
-    hash-partitioned once — so per batch the only bytes that move are the
-    broadcast query batch in and the O(q·k·shards) candidate rows out:
-    corpus bytes cross the JVM->Python boundary zero times in steady
-    state (the legacy path re-shipped and re-decoded every shard
-    partition every batch; decode alone was 28.5% of 5M shard-task wall).
-    A cache miss self-heals executor-side from the index parquet via
-    partition pruning, which is also what makes this correct on a
-    multi-node cluster with per-node caches.
-
-    ``skeleton`` may be a DataFrame or a zero-arg callable returning one,
-    resolved only after the query batch passes the collect gate — same
-    deferred-builder contract as :func:`scan_search`'s scan side (r4
-    ADVICE: an oversized auto-mode batch must not leave unused pinned
-    state behind)."""
-    spark = queries.sparkSession
-    per_shard_k = k  # README.md:157 needs only k' >= k (see scan_search)
-    metric = params.metric
-    dtype = np.int64 if metric == "hamming" else np.float32
-    q_pd = _collect_query_batch(queries)
-    if callable(skeleton):
-        skeleton = skeleton()
-
-    probe_map: dict[int, np.ndarray] | None = None
-    if shard_probes is not None and len(q_pd):
-        if callable(routing):
-            routing = routing()
-        if routing is None:
-            routing = cached_scan_routing(
-                skeleton, index_path, token, root, metric
-            )
-        probe_map = _probe_map_from_routing(
-            q_pd, routing, metric, dtype, shard_probes
-        )
-    bc = spark.sparkContext.broadcast((q_pd, probe_map))
-
-    def run(pdf: pd.DataFrame) -> pd.DataFrame:
-        from rust_diskann_spark.operators import shard_cache
-        from time import perf_counter as _pc
-
-        _t0 = _pc()
-        sid = int(pdf["shard"].iloc[0])
-        q_all, pmap = bc.value
-        q_sel = q_all
-        if pmap is not None:
-            sel = pmap.get(sid)
-            q_sel = q_all.iloc[sel if sel is not None else []]
-        if len(q_sel) == 0:
-            return _empty_result_pdf()
-        tup = shard_cache.get_or_decode(root, token, sid, index_path, metric)
-        if tup is shard_cache.EMPTY:
-            return _empty_result_pdf()
-        return _search_decoded(
-            tup, q_sel, metric, dtype, per_shard_k, beam_width, t0=_t0,
-            source="cache",
-        )
-
-    candidates = skeleton.groupBy("shard").applyInPandas(
-        run, schema=RESULT_SCHEMA
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("dist").asc(), F.col("id").asc()
-    )
-    return (
-        candidates.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "rank", "id", "dist")
-    )
 
 
 def group_shards_by_routing(
@@ -732,11 +669,11 @@ def grouped_scan_search(
     routing=None,
     skeleton=None,
 ) -> DataFrame:
-    """:func:`cached_scan_search` with the task unit raised from one
-    shard to one PIECE GROUP (:func:`group_shards_by_routing`): each
-    task serves every probed member piece of its group from the mmap
-    cache, so a query's ~6 home-cluster pieces cost ONE task dispatch
-    (plus one kernel call per probed piece) instead of ~6 dispatches —
+    """Scan search over the mmap shard cache with the task unit set to
+    one PIECE GROUP (:func:`group_shards_by_routing`): each task serves
+    every probed member piece of its group from the mmap cache, so a
+    query's ~6 home-cluster pieces cost ONE task dispatch (plus one
+    kernel call per probed piece) instead of ~6 dispatches —
     the per-probe-cost lever for the 5M serving bar (r9 verdict #2).
 
     r11: the original r10 design additionally UNIONED the group's
@@ -752,11 +689,11 @@ def grouped_scan_search(
     3072 only reached 0.41). One beam over b sibling pieces needs ~b x
     budget, which erases the kernel saving. The union path was
     therefore cut; what remains is the dispatch amortization, with
-    results BIT-IDENTICAL to the singleton cached scan: the per-shard
-    probe map is computed exactly as in :func:`cached_scan_search`, and
-    each group task runs the same per-piece kernel calls the singleton
-    path would have run, just without ~6x task/scheduling/Arrow
-    overhead. ``routing`` (the per-SHARD routing dict) is required when
+    results BIT-IDENTICAL to ungrouped scan serving: each piece serves
+    exactly the queries the per-shard probe map routes to it, and each
+    group task runs the same per-piece kernel calls a one-shard task
+    would, just without ~6x task/scheduling/Arrow overhead.
+    ``routing`` (the per-SHARD routing dict) is required when
     ``shard_probes`` is set — the handle's memoized routing job
     provides it. Results follow the same README.md:157 merge
     contract."""
@@ -772,9 +709,9 @@ def grouped_scan_search(
             items, "grp INT, sids ARRAY<INT>"
         ).repartitionByRange(max(len(items), 1), "grp")
 
-    # the probe map is per SHARD — identical to cached_scan_search's —
-    # so each piece serves exactly the queries the singleton path would
-    # have routed to it (bit-identical results; r11, see docstring)
+    # the probe map is per SHARD, so each piece serves exactly the
+    # queries ungrouped serving routes to it (bit-identical results;
+    # r11, see docstring)
     probe_map: dict[int, np.ndarray] | None = None
     if shard_probes is not None and len(q_pd):
         if callable(routing):
@@ -788,13 +725,13 @@ def grouped_scan_search(
             q_pd, routing, metric, dtype, shard_probes
         )
     bc = spark.sparkContext.broadcast((q_pd, probe_map))
+    profile_dir = _PROFILE_DIR
 
     def run(pdf: pd.DataFrame) -> pd.DataFrame:
         from time import perf_counter as _pc
 
         from rust_diskann_spark.operators import shard_cache
 
-        _t0 = _pc()
         sids = [int(x) for x in pdf["sids"].iloc[0]]
         q_all, pmap = bc.value
         parts = []
@@ -805,15 +742,18 @@ def grouped_scan_search(
                 q_sel = q_all.iloc[sel if sel is not None else []]
             if len(q_sel) == 0:
                 continue
+            # per piece: each profile record covers only its own
+            # decode + kernel + emit
+            _t0 = _pc()
             tup = shard_cache.get_or_decode(
                 root, token, sid, index_path, metric
             )
-            if tup is None or tup is shard_cache.EMPTY:
+            if tup is shard_cache.EMPTY:
                 continue
             parts.append(
                 _search_decoded(
                     tup, q_sel, metric, dtype, k, beam_width, t0=_t0,
-                    source="group",
+                    source="group", profile_dir=profile_dir,
                 )
             )
         if not parts:
@@ -898,6 +838,7 @@ def scan_search(
             q_pd, routing, metric, dtype, shard_probes
         )
     bc = spark.sparkContext.broadcast((q_pd, probe_map))
+    profile_dir = _PROFILE_DIR
 
     def run(index_pdf: pd.DataFrame) -> pd.DataFrame:
         q_all, pmap = bc.value
@@ -909,7 +850,7 @@ def scan_search(
             )
         return _shard_search_pdf(
             index_pdf, q_sel, metric, dtype, per_shard_k, beam_width,
-            has_entries,
+            has_entries, profile_dir,
         )
 
     candidates = scan_side.groupBy("shard").applyInPandas(
@@ -1134,18 +1075,24 @@ def broadcast_search(
     shard_probes: int | str | None = None,
     shards_bc=None,
 ) -> DataFrame:
-    """ZERO-shuffle search for indexes that fit executor memory.
+    """ZERO-shuffle search with the query partition as the task unit.
 
     The dual of :func:`search`, mirroring Spark's broadcast-join vs
-    shuffle-join choice: the whole index (all shards' vectors + graphs)
-    is a Spark broadcast variable; queries run through one narrow
-    ``mapInPandas`` where each Arrow batch beam-searches every shard and
-    finalizes its own global top-k — no cogroup shuffle of the corpus, no
-    per-query-block index replication, no merge exchange. This is the
-    regime the reference actually benchmarks (a SIFT1M index resident in
-    RAM, queried by a parallel batch — README.md:120-134); use the
-    cogrouped :func:`search` when the index exceeds the broadcast
-    threshold.
+    shuffle-join choice: every task sees the whole index (all shards'
+    vectors + graphs); queries run through one narrow ``mapInPandas``
+    where each Arrow batch routes its own queries, beam-searches every
+    shard it probes and finalizes its own global top-k — no driver
+    collect, no cogroup shuffle of the corpus, no per-query-block index
+    replication, no merge exchange. This is the regime the reference
+    actually benchmarks (a SIFT1M index resident in RAM, queried by a
+    parallel batch — README.md:120-134; lib.rs:635-693 merges each
+    query's top-k in the serving thread).
+
+    Residency is whatever ``shards_bc`` holds: a real Spark broadcast
+    (one unpickled copy per Python worker) or a
+    :class:`~rust_diskann_spark.operators.shard_cache.MmapShardSource`
+    (one page-cache copy per node, for indexes too large to broadcast —
+    scan mode on a file-backed index).
 
     ``shard_probes``: search only the p nearest shards (IVF-style
     routing over the Vamana shards). ``None`` scans every shard — the
@@ -1159,19 +1106,31 @@ def broadcast_search(
     boundaries (r2 measured probed4 recall 0.7586 routing on medoids;
     the entry sets cover each shard's extent by construction).
 
-    ``shards_bc``: a prebuilt broadcast of :func:`materialize_shards`
-    output — pass it to amortize index materialization across calls
-    (DiskANNIndex does this); None collects + broadcasts here.
+    ``shards_bc``: anything whose ``.value`` is the
+    :func:`materialize_shards` map — a prebuilt broadcast of it or an
+    ``MmapShardSource`` — pass it to amortize index materialization
+    across calls (DiskANNIndex does this); None collects + broadcasts
+    here.
+
+    Task count equals the query frame's partition count; a frame with
+    fewer partitions than ``defaultParallelism`` is fanned out to 3x
+    that (see below).
     """
+    from rust_diskann_spark.operators import shard_cache
+
     spark = queries.sparkSession
     metric = params.metric
     dtype = np.int64 if metric == "hamming" else np.float32
+    profile_dir = _PROFILE_DIR
 
     bc = shards_bc
     if bc is None:
         bc = spark.sparkContext.broadcast(
             materialize_shards(index_vectors, index_graph, params)
         )
+    source = (
+        "mmap" if isinstance(bc, shard_cache.MmapShardSource) else "broadcast"
+    )
 
     def run(batches):
         from time import perf_counter as _pc
@@ -1208,15 +1167,18 @@ def broadcast_search(
             # measurable slice of the per-batch serving overhead)
             t_kernel = t_flat = 0.0
             parts_q, parts_i, parts_d = [], [], []
+            recs = []
             for s_idx, (
                 gids, mat, graph, medoid_local, sqn, ent, *rest
             ) in enumerate(shard_list):
+                _ts = _pc()
                 if pmask is None:
                     sel = np.arange(len(qmat))
                 else:
                     sel = np.nonzero(pmask[:, s_idx])[0]
                     if len(sel) == 0:
                         continue
+                q_sel = qmat[sel]
                 _tk = _pc()
                 # per-shard return count is k, NOT max(k, beam): merging
                 # each shard's (dist, id)-ordered top-k preserves the
@@ -1225,17 +1187,22 @@ def broadcast_search(
                 # beam-sized returns put beam/k x more rows through the
                 # flat/merge stage (51x at k=10 / beam 512)
                 results = vamana.beam_search_batch(
-                    mat, graph, metric, medoid_local, qmat[sel],
+                    mat, graph, metric, medoid_local, q_sel,
                     k, beam_width, sqnorms=sqn, entries=ent,
                     quant=rest[0] if rest else None,
                 )
-                t_kernel += _pc() - _tk
                 _tf = _pc()
                 r_lens, flat_i, flat_d = _results_flat(results, gids)
                 parts_q.append(np.repeat(sel, r_lens))
                 parts_i.append(flat_i)
                 parts_d.append(flat_d)
-                t_flat += _pc() - _tf
+                _te = _pc()
+                t_kernel += _tf - _tk
+                t_flat += _te - _tf
+                if profile_dir:
+                    recs.append(_shard_task_record(
+                        source, _ts, len(gids), len(sel), _tk, _tf, _te,
+                    ))
             _t_shards = _pc()
             qa = np.concatenate(parts_q) if parts_q else np.empty(0, np.int64)
             ia = np.concatenate(parts_i) if parts_i else np.empty(0, np.int64)
@@ -1255,9 +1222,12 @@ def broadcast_search(
                     "dist": ds[m],
                 }
             )
-            if _PROFILE_DIR:
+            if profile_dir:
                 _profile_emit(
+                    profile_dir,
+                    *recs,
                     {
+                        "path": "partition",
                         "t0": _t0,
                         "n_q": int(len(qmat)),
                         "n_shards": len(shard_list),

@@ -281,7 +281,11 @@ def record_source(root: str, token: str, index_path: str) -> None:
 
 
 def drop_index_cache(root: str, token: str) -> None:
-    """Remove one index's cache tree (``DiskANNIndex.close()``)."""
+    """Remove one index's cache tree and this process's memoized shard
+    map for it (``DiskANNIndex.close()`` runs this on the driver and in
+    a one-task-per-core executor fan-out). Dropping the memo lets the
+    deleted files unmap, so a worker stops holding their pages."""
+    _SHARD_MAP_MEMO.pop(token, None)
     shutil.rmtree(os.path.join(root, token), ignore_errors=True)
 
 
@@ -291,6 +295,7 @@ def drop_index_cache(root: str, token: str) -> None:
 # content-derived, so a memoized map can never serve a different index's
 # data; mmaps of since-deleted cache files stay valid on POSIX (the inode
 # lives until unmapped), so a concurrent close() cannot corrupt reads.
+# drop_index_cache pops the entry, releasing the maps in that process.
 _SHARD_MAP_MEMO: dict[str, dict] = {}
 
 

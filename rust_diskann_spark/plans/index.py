@@ -126,15 +126,18 @@ class DiskANNIndex:
     # lazily-collected {shard: routing-point matrix} for probed scan
     # search — O(shards x entry_set) driver memory, one tiny job ever
     _scan_routing: object = None
-    # cached-scan state: the shard-id skeleton DataFrame (one int row per
-    # shard — the dispatch side once residency lives in the mmap cache)
-    # and the index's content-derived cache token
+    # mmap-cache state: the shard-id skeleton DataFrame (one int row per
+    # shard — the dispatch side of the cache-populate/routing job) and
+    # the index's content-derived cache token
     _skeleton: object = None
     _cache_token: str | None = None
     # piece-group serving state (group_pieces=True): the routing-derived
     # {gid: [sids]} grouping and its persisted (grp, sids) skeleton
     _groups: object = None
     _group_skeleton: object = None
+    # mmap-backed shard map source (file-backed scan mode, and explicit
+    # broadcast mode on an index too large to broadcast)
+    _mmap_src: object = None
 
     def _broadcast_shards(self):
         if self._shards_bc is None:
@@ -148,10 +151,7 @@ class DiskANNIndex:
                 # node-local mmap cache instead of a real broadcast —
                 # one page-cache copy per node rather than one unpickled
                 # copy PER WORKER (the r7 5M attempt OOM-killed the JVM
-                # at 51 GB RSS exactly this way). Populate the cache with
-                # the distributed routing job first (one shard per task)
-                # so the first query batch doesn't have 32 workers racing
-                # to decode the same shards.
+                # at 51 GB RSS exactly this way).
                 #
                 # Feasible-but-over-auto-budget indexes take the REAL
                 # broadcast: per-worker copies are anonymous memory
@@ -161,11 +161,7 @@ class DiskANNIndex:
                 # gated slices, scale_runs_r9/1m_resid_real.log). An
                 # explicit mode="broadcast" is the caller asking for
                 # residency; only true infeasibility should downgrade it.
-                self._get_scan_routing()
-                self._shards_bc = shard_cache.MmapShardSource(
-                    shard_cache.cache_root(), self._get_cache_token(),
-                    self.path, self.meta.metric, self.meta.num_shards,
-                )
+                self._shards_bc = self._mmap_shards()
             else:
                 self._shards_bc = self.spark.sparkContext.broadcast(
                     search_ops.materialize_shards(
@@ -173,6 +169,20 @@ class DiskANNIndex:
                     )
                 )
         return self._shards_bc
+
+    def _mmap_shards(self):
+        """Memoized :class:`shard_cache.MmapShardSource` over this
+        file-backed index. The one-shard-per-task routing job runs first
+        and populates every node-local cache entry, so query-partition
+        tasks that each map the whole index never race to decode the
+        same shard."""
+        if self._mmap_src is None:
+            self._get_scan_routing()
+            self._mmap_src = shard_cache.MmapShardSource(
+                shard_cache.cache_root(), self._get_cache_token(),
+                self.path, self.meta.metric, self.meta.num_shards,
+            )
+        return self._mmap_src
 
     def _get_scan_side(self):
         if self._scan_side is None:
@@ -242,7 +252,7 @@ class DiskANNIndex:
     def _get_skeleton(self):
         """Tiny persisted (shard) frame, RANGE-partitioned into one
         partition per shard id. RangePartitioning satisfies the
-        ClusteredDistribution the cached scan's groupBy requires, so no
+        ClusteredDistribution the routing job's groupBy requires, so no
         exchange is added — and unlike ``repartition(n, "shard")`` (hash,
         which collides n distinct ints into <n buckets so some tasks
         serve 2 shards and some none — r8 verdict nit #3) the layout
@@ -326,12 +336,11 @@ class DiskANNIndex:
         ``'auto'`` adapts the probe set per query from the routing
         geometry (every shard within a margin of the best — covers all
         cap-split pieces of the query's home cluster without the caller
-        knowing the piece count; operators/search.py _probe_mask). In
-        scan mode each resident shard task receives only the query rows
-        that probe it — per-shard work drops to ~n_q * p / n_shards while
-        the corpus partitions stay put (the partition-pruning analog for
-        an applyInPandas scan). Cogroup cannot route (it replicates every
-        query inside the exchange) and raises.
+        knowing the piece count; operators/search.py _probe_mask). Each
+        query runs the kernel only on the shards it probes, so per-query
+        work drops to ~p / n_shards of a full scan while the corpus
+        stays put. Cogroup cannot route (it replicates every query
+        inside the exchange) and raises.
 
         ``mode``: "auto" picks by the footprint estimate below;
         "broadcast"/"scan"/"cogroup" force a strategy — the same escape
@@ -350,25 +359,45 @@ class DiskANNIndex:
           broadcast variable and search is ONE narrow mapInPandas over
           queries — zero shuffles (the reference's own regime: a
           RAM-resident index, parallel query batch, README.md:120-134).
-        - **scan mode** otherwise (the 100 TB steady-state path): the
-          index side is hash-partitioned by shard + persisted ONCE; each
-          query batch is collected + broadcast (the small side) and one
-          task per shard searches the resident shard. Per batch, only the
-          top-k merge shuffles (O(q*k'*shards) rows) — corpus bytes never
-          move again.
+        - **scan mode** otherwise (the >memory steady-state path), on a
+          file-backed index: the same ONE narrow mapInPandas over query
+          partitions, with residency moved to the node-local mmap shard
+          cache (operators/shard_cache.py) — each task routes its own
+          queries, searches every shard it probes from the node's
+          page-cache copy, and finalizes the global top-k in-task.
+          Per batch: no driver collect, no broadcast, 0 shuffles, and
+          corpus bytes never move; any batch size works, probed or not.
+          Residency tradeoff: each node caches the shards its query
+          partitions probe — up to the whole index per node (one-shard
+          tasks cached about a share of it). The first use runs one
+          shard-per-task job that populates every cache entry and
+          collects the routing points.
+          ``group_pieces=True`` keeps shard-side tasks instead: the
+          query batch is collected + broadcast (capped at
+          ``SCAN_QUERY_COLLECT_CAP`` rows) and one task per routing
+          piece group serves its probed pieces, then a window top-k
+          merge shuffles O(q*k*shards) rows. ``RDS_SCAN_CACHE=0`` (or a
+          handle over derived frames) takes the legacy JVM-persisted
+          shard side with the same collect + merge shape; there an
+          oversized batch in auto mode falls back to cogroup.
         - **cogrouped mode** (explicit only): corpus and queries cogroup-
           exchange per batch. Right only for one-shot searches or query
-          sets too large to collect; ``query_blocks=None`` sizes task
-          fan-out to ``defaultParallelism // num_shards``.
+          sets too large to collect for the grouped or legacy scan;
+          ``query_blocks=None`` sizes task fan-out to
+          ``defaultParallelism // num_shards``.
 
-        Serving-loop note (broadcast mode): the query frame is
-        repartitioned to ``defaultParallelism`` only when it has fewer
-        partitions, so a loop issuing many batches should pre-partition +
-        persist its query source ONCE — ideally to 2-4x the core count:
-        per-query beam cost varies, and one-task-per-core partitioning
-        turns that variance into a stage-tail straggler (measured at 1M:
-        median task 0.63 s vs max 0.82 s per batch; 3x finer partitions
-        recovered ~20% steady QPS).
+        Task count (broadcast and file-backed scan): one task per query
+        partition. A query frame with fewer partitions than
+        ``defaultParallelism`` is repartitioned to 3x it, so a serving
+        loop issuing many batches should pre-partition + persist its
+        query source ONCE — ideally to 2-4x the core count: per-query
+        beam cost varies, and one-task-per-core partitioning turns that
+        variance into a stage-tail straggler (measured at 1M: median
+        task 0.63 s vs max 0.82 s per batch; 3x finer partitions
+        recovered ~20% steady QPS). Each Python task has a fixed floor
+        (110-250 ms measured on a 4-vCPU host, mostly pyspark's
+        per-task ``importlib.invalidate_caches()``), so a small batch
+        served by many partitions pays it many times.
         """
         if mode not in ("auto", "broadcast", "scan", "cogroup"):
             raise ValueError(
@@ -377,11 +406,12 @@ class DiskANNIndex:
         if group_pieces and (
             mode not in ("auto", "scan") or not self._use_scan_cache()
         ):
-            # grouping lives in the mmap-cache serving layer (the union
-            # sub-graph is a cache entry); the other strategies have no
-            # home for it — silently ignoring the knob would misreport
-            # the measured configuration (same rationale as the cogroup
-            # shard_probes guard)
+            # grouping changes the task unit of scan serving over the
+            # mmap cache (one task per piece group amortizes dispatch);
+            # the other strategies have no such task unit — silently
+            # ignoring the knob would misreport the measured
+            # configuration (same rationale as the cogroup shard_probes
+            # guard)
             raise ValueError(
                 "group_pieces requires the cached scan path "
                 "(mode auto|scan on a file-backed index with "
@@ -403,51 +433,47 @@ class DiskANNIndex:
             raise ValueError(
                 "shard_probes is not supported in cogroup mode"
             )
-        if use_broadcast:
+        scan = mode in ("auto", "scan")
+        if use_broadcast or (
+            scan and self._use_scan_cache() and not group_pieces
+        ):
+            # one narrow stage over the query partitions; file-backed scan
+            # serves the shards from the node-local mmap cache — nothing
+            # is collected, so no batch-size gate and no cogroup fallback
             return search_ops.broadcast_search(
                 queries, self.vectors, self.graph, self.params, k, beam_width,
-                shard_probes=shard_probes, shards_bc=self._broadcast_shards(),
+                shard_probes=shard_probes,
+                shards_bc=self._broadcast_shards()
+                if use_broadcast
+                else self._mmap_shards(),
             )
-        if mode in ("auto", "scan"):
-            # scan mode collects the query batch driver-side (a capped
-            # limit-collect — the collect itself is the gate, evaluated
-            # once; r3 ADVICE replaced the separate pre-count, which
-            # double-evaluated the lineage and could race non-deterministic
-            # sources). In auto mode a too-large batch falls through to the
-            # cogrouped search (which never collects) instead of OOMing the
-            # driver; explicit scan mode propagates the error.
+        if scan:
+            # the shard-side scans collect the query batch driver-side (a
+            # capped limit-collect — the collect itself is the gate,
+            # evaluated once; r3 ADVICE replaced the separate pre-count,
+            # which double-evaluated the lineage and could race
+            # non-deterministic sources). In auto mode a too-large batch
+            # falls through to the cogrouped search (which never collects)
+            # instead of OOMing the driver; explicit scan mode propagates
+            # the error.
             try:
-                if self._use_scan_cache():
-                    if group_pieces:
-                        # task unit = one piece GROUP: a query's ~6
-                        # home-cluster cap-split pieces cost one task
-                        # dispatch instead of ~6; kernel calls stay
-                        # per-piece, results bit-identical to the
-                        # singleton cached scan (r11 — see
-                        # operators/search.py grouped_scan_search)
-                        return search_ops.grouped_scan_search(
-                            queries, self._get_groups(), self.path,
-                            self._get_cache_token(),
-                            shard_cache.cache_root(),
-                            self.params, k, beam_width,
-                            shard_probes=shard_probes,
-                            routing=self._get_scan_routing
-                            if shard_probes is not None
-                            else None,
-                            skeleton=self._get_group_skeleton,
-                        )
-                    # file-backed index: residency is the node-local mmap
-                    # shard cache; the dispatch side is the shard-id
-                    # skeleton, so no corpus bytes ever shuffle or persist
-                    # in the JVM (operators/shard_cache.py)
-                    return search_ops.cached_scan_search(
-                        queries, self._get_skeleton, self.path,
-                        self._get_cache_token(), shard_cache.cache_root(),
+                if group_pieces:
+                    # task unit = one piece GROUP: a query's ~6
+                    # home-cluster cap-split pieces cost one task
+                    # dispatch instead of ~6; kernel calls stay
+                    # per-piece, results bit-identical to ungrouped
+                    # serving (r11 — see operators/search.py
+                    # grouped_scan_search)
+                    return search_ops.grouped_scan_search(
+                        queries, self._get_groups(), self.path,
+                        self._get_cache_token(),
+                        shard_cache.cache_root(),
                         self.params, k, beam_width,
                         shard_probes=shard_probes,
                         routing=self._get_scan_routing
                         if shard_probes is not None
                         else None,
+                        skeleton=self._get_group_skeleton,
                     )
                 # pass the scan-side BUILDER, not the built side: scan_search
                 # gates the query batch first, so an oversized batch falls
@@ -464,9 +490,9 @@ class DiskANNIndex:
                 if mode == "scan":
                     raise
                 if group_pieces:
-                    # the cogroup fallback has no union-cache serving
-                    # layer — surface it rather than silently changing
-                    # the measured configuration
+                    # the cogroup fallback has no piece-group task unit —
+                    # surface it rather than silently changing the
+                    # measured configuration
                     raise ValueError(
                         "group_pieces requires a collectable query batch "
                         "(scan mode); this batch exceeded the scan "
@@ -521,7 +547,10 @@ class DiskANNIndex:
           just to feed the one-time Arrow collect cost the old warm a
           full extra scan of the index (r4: warm 487 s -> the collect
           itself is seconds once the join/persist work is gone).
-        - scan (or auto over the threshold): build + persist the scan
+        - scan (or auto over the threshold): on a file-backed index, the
+          one-shard-per-task routing job — it decodes every shard into
+          the node-local mmap cache and collects the routing points;
+          with ``RDS_SCAN_CACHE=0``, build + persist the legacy scan
           side — the ONE corpus shuffle that every later batch reuses.
         - cogroup: persist the raw tables; the per-batch cogroup
           exchange re-reads them every batch.
@@ -579,10 +608,7 @@ class DiskANNIndex:
             ).count()
         elif mode in ("auto", "scan"):
             if self._use_scan_cache():
-                # the routing job decodes every shard through
-                # get_or_decode, so one pass populates the whole node-local
-                # cache AND yields the probe-routing points
-                self._get_scan_routing()
+                self._mmap_shards()
             else:
                 self._get_scan_side()
         else:
@@ -603,6 +629,7 @@ class DiskANNIndex:
             self._scan_side.unpersist()
             self._scan_side = None
         self._scan_routing = None
+        self._mmap_src = None
         if self._skeleton is not None:
             self._skeleton.unpersist()
             self._skeleton = None

@@ -1,8 +1,8 @@
 """Piece-group serving (r9 verdict #2a, r11 shape): co-probed cap-split
 pieces are served ONE TASK per group (operators/search.py
 grouped_scan_search), with per-piece kernel calls and the singleton
-per-shard probe map — so grouped results are BIT-IDENTICAL to the
-per-shard cached scan and the grouping only amortizes task dispatch.
+per-shard probe map — so grouped results are BIT-IDENTICAL to
+ungrouped scan serving and the grouping only amortizes task dispatch.
 
 The r10 union-sub-graph variant (one shared beam over a block-diagonal
 merge of the group's pieces) was CUT in r11 after its first gated
@@ -13,13 +13,16 @@ disconnected sibling blocks (scale_runs_r11, OPTIMIZATION_r11.md).
 Contract:
 
 - grouped results (singleton AND multi-piece groups, probed or
-  scan-all) are bit-identical to the per-shard cached scan;
+  scan-all) are bit-identical to ungrouped scan serving;
 - the routing-derived grouping separates well-separated clusters and
   respects the max_pieces chunk cap;
 - grouped serving populates the same per-shard mmap entries as the
   singleton path (no union entries), reused across batches, dropped by
-  close() with the token tree."""
+  close() with the token tree;
+- each piece's profile record covers only that piece's work."""
 
+import glob
+import json
 import os
 
 import numpy as np
@@ -154,6 +157,36 @@ def test_grouped_populates_per_shard_entries_only(spark, kmeans_idx):
     # close() drops the whole token tree
     idx.close()
     assert not os.path.exists(token_dir)
+
+
+def test_grouped_profile_windows_are_per_piece(
+    spark, kmeans_idx, tmp_path, monkeypatch
+):
+    """A group task writes one ``shard_task`` record per piece, and each
+    record's [t0, t0 + wall] window covers only that piece: windows
+    written by one worker process never overlap (a task-start t0 shared
+    by every piece made piece i's ``decode`` absorb pieces 0..i-1)."""
+    idx, corpus = kmeans_idx
+    groups = idx._get_groups()
+    assert max(len(s) for s in groups.values()) >= 2  # multi-piece task
+    prof = tmp_path / "prof"
+    prof.mkdir()
+    monkeypatch.setattr(search_ops, "_PROFILE_DIR", str(prof))
+    idx.search_with_dists(
+        _queries(corpus), k=5, beam_width=32, mode="scan",
+        group_pieces=True,
+    ).count()
+    n_recs = 0
+    for p in glob.glob(os.path.join(str(prof), "*.jsonl")):
+        with open(p) as fh:
+            recs = [json.loads(line) for line in fh]
+        assert {r["source"] for r in recs} == {"group"}
+        n_recs += len(recs)
+        wins = sorted((r["t0"], r["t0"] + r["wall"]) for r in recs)
+        for (_, end), (start, _) in zip(wins, wins[1:]):
+            assert start >= end - 1e-6  # wall is rounded to 1 us
+    # scan-all: one record per piece of every group
+    assert n_recs == sum(len(s) for s in groups.values())
 
 
 def test_group_pieces_guards(spark, kmeans_idx):

@@ -291,7 +291,9 @@ def test_auto_mode_oversized_batch_falls_back_to_cogroup(spark, sf_dir, monkeypa
     """r3 ADVICE: the scan-batch cap gate is the capped collect itself —
     evaluated once inside scan_search — and auto mode reroutes an
     oversized batch to the cogrouped search (never collects); explicit
-    scan mode propagates the error."""
+    scan mode propagates the error. The gate lives on the legacy
+    JVM-persisted scan (RDS_SCAN_CACHE=0): file-backed scan serving
+    collects nothing (test_scan_cache covers its oversized batches)."""
     import tempfile, shutil, os as _os
 
     import pytest as _pytest
@@ -318,6 +320,7 @@ def test_auto_mode_oversized_batch_falls_back_to_cogroup(spark, sf_dir, monkeypa
                                          mode="broadcast").collect())
     )
     # force the auto path past broadcast and over the scan collect cap
+    monkeypatch.setenv("RDS_SCAN_CACHE", "0")
     monkeypatch.setattr(plans_index, "BROADCAST_INDEX_THRESHOLD", -1)
     monkeypatch.setattr(search_ops, "SCAN_QUERY_COLLECT_CAP", 3)
     res = idx.search_with_dists(queries, k=3, beam_width=32, mode="auto")

@@ -3,6 +3,8 @@ path must be bit-identical to broadcast and legacy scan search, self-heal
 from the index parquet on cache loss, and release its disk footprint on
 close()."""
 
+import glob
+import json
 import os
 import shutil
 
@@ -67,17 +69,126 @@ def test_cached_scan_matches_broadcast_and_legacy(spark, idx_path,
 
 
 def test_cached_scan_plan_ships_no_corpus(spark, idx_path):
-    """The cached plan's corpus side is the shard-id skeleton: the index
-    parquet must not appear in the scan-mode physical plan (workers read
-    it directly, outside Spark's scan operators)."""
+    """File-backed scan serving is ONE narrow stage over the query
+    partitions: a single MapInPandas, no exchange (no per-batch merge
+    shuffle) and no window. The index parquet must not appear in the
+    plan either — workers read shards from the node-local mmap cache,
+    outside Spark's scan operators."""
+    q = _queries(spark, _corpus(spark))
+    # precondition: enough query partitions that no fan-out is added
+    assert q.rdd.getNumPartitions() >= spark.sparkContext.defaultParallelism
+    idx = open_index(spark, idx_path)
+    for probes in (None, "auto"):
+        plan = idx.search_with_dists(
+            q, k=5, beam_width=32, mode="scan", shard_probes=probes,
+        )._jdf.queryExecution().executedPlan().toString()
+        assert plan.count("MapInPandas") == 1, plan
+        assert "Exchange" not in plan, plan
+        assert "Window" not in plan, plan
+        assert "vectors.parquet" not in plan
+        assert "graph.parquet" not in plan
+    idx.close()
+
+
+def test_file_backed_scan_serves_batches_over_collect_cap(
+    spark, idx_path, monkeypatch
+):
+    """File-backed scan serving collects nothing, so the query collect
+    cap no longer applies: a probed batch larger than the cap serves in
+    explicit scan mode (no ScanBatchTooLarge, no cogroup fallback) with
+    broadcast mode's rows."""
+    from rust_diskann_spark.operators import search as search_ops
+
     q = _queries(spark, _corpus(spark))
     idx = open_index(spark, idx_path)
-    plan = idx.search_with_dists(
-        q, k=5, beam_width=32, mode="scan"
-    )._jdf.queryExecution().executedPlan().toString()
-    assert "vectors.parquet" not in plan
-    assert "graph.parquet" not in plan
+    want = _rows(idx.search_with_dists(
+        q, k=5, beam_width=32, shard_probes="auto", mode="broadcast"
+    ))
+    monkeypatch.setattr(search_ops, "SCAN_QUERY_COLLECT_CAP", 3)
+    assert q.count() > search_ops.SCAN_QUERY_COLLECT_CAP
+    got = _rows(idx.search_with_dists(
+        q, k=5, beam_width=32, shard_probes="auto", mode="scan"
+    ))
+    assert got == want
     idx.close()
+
+
+SHARD_TASK_KEYS = {
+    "path", "source", "t0", "n_rows", "n_q", "decode", "kernel", "emit",
+    "wall",
+}
+PARTITION_KEYS = {
+    "path", "t0", "n_q", "n_shards", "stack", "route", "kernel", "flat",
+    "merge", "df", "wall",
+}
+
+
+def _profile_records(profile_dir):
+    recs = []
+    for p in glob.glob(os.path.join(profile_dir, "*.jsonl")):
+        with open(p) as fh:
+            recs.extend(json.loads(line) for line in fh)
+    return recs
+
+
+def test_search_profile_record_schemas(spark, idx_path, tmp_path,
+                                       monkeypatch):
+    """RDS_PROFILE_DIR records keep one schema per record kind whatever
+    the task unit: a query-partition task writes one ``shard_task``
+    record per (Arrow batch, probed shard) plus one ``partition`` record
+    per batch, and a shard task writes ``shard_task`` records with the
+    same keys."""
+    from rust_diskann_spark.operators import search as search_ops
+
+    q = _queries(spark, _corpus(spark))
+    n_q = q.count()
+    idx = open_index(spark, idx_path)
+    idx.warm("scan")
+    part_dir = tmp_path / "prof_partition"
+    part_dir.mkdir()
+    monkeypatch.setattr(search_ops, "_PROFILE_DIR", str(part_dir))
+    idx.search_with_dists(q, k=5, beam_width=32, mode="scan").count()
+    recs = _profile_records(str(part_dir))
+    parts = [r for r in recs if r["path"] == "partition"]
+    shard_recs = [r for r in recs if r["path"] == "shard_task"]
+    assert len(parts) + len(shard_recs) == len(recs)
+    assert parts and all(set(r) == PARTITION_KEYS for r in parts)
+    assert shard_recs and all(set(r) == SHARD_TASK_KEYS for r in shard_recs)
+    assert {r["source"] for r in shard_recs} == {"mmap"}
+    # scan-all: every batch searches every shard once
+    assert sum(r["n_q"] for r in parts) == n_q
+    assert len(shard_recs) == len(parts) * idx.meta.num_shards
+    assert sum(r["n_q"] for r in shard_recs) == n_q * idx.meta.num_shards
+    for r in shard_recs:
+        assert r["decode"] + r["kernel"] + r["emit"] <= r["wall"] + 1e-5
+
+    shard_dir = tmp_path / "prof_shard"
+    shard_dir.mkdir()
+    monkeypatch.setattr(search_ops, "_PROFILE_DIR", str(shard_dir))
+    monkeypatch.setenv("RDS_SCAN_CACHE", "0")
+    idx.search_with_dists(q, k=5, beam_width=32, mode="scan").count()
+    legacy = _profile_records(str(shard_dir))
+    assert legacy and all(set(r) == SHARD_TASK_KEYS for r in legacy)
+    assert {r["path"] for r in legacy} == {"shard_task"}
+    idx.close()
+
+
+def test_drop_index_cache_releases_process_shard_map(idx_path):
+    """drop_index_cache (close()'s per-core fan-out) must also pop this
+    process's memoized mmap shard map, or a worker keeps the deleted
+    cache files mapped until it exits."""
+    from rust_diskann_spark.sources import index_store
+
+    n_shards = index_store.read_metadata(idx_path).num_shards
+    token = shard_cache.index_token(idx_path)
+    root = shard_cache.cache_root()
+    m = shard_cache.load_shard_map(
+        root, token, idx_path, "l2", range(n_shards)
+    )
+    assert m and shard_cache._SHARD_MAP_MEMO[token] is m
+    shard_cache.drop_index_cache(root, token)
+    assert token not in shard_cache._SHARD_MAP_MEMO
+    assert not os.path.exists(os.path.join(root, token))
 
 
 def test_cached_probed_matches_legacy_probed(spark, idx_path, monkeypatch):
