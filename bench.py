@@ -401,6 +401,29 @@ def run_once() -> None:
     spark.stop()
 
 
+def _n_queries_valid(result: dict) -> int:
+    return sum(bool(v) for v in result.get("queries_valid", {}).values())
+
+
+def attempt_key(result: dict) -> tuple:
+    """Selection key for one attempt's result record; the larger key wins,
+    and on equal keys the earlier attempt is kept.
+
+    Whole-run validity leads: a ``calibration_valid`` attempt must WIN the
+    selection, not merely stop the loop (under an (n_valid, -value) key a
+    valid attempt once lost to a faster invalid one). Then the number of
+    queries whose interleaved probes validated, then the headline total
+    (lower is better); a missing total ranks below any real one,
+    including 0.0."""
+    value = result.get("value")
+    return (
+        1 if result.get("calibration_valid") else 0,
+        _n_queries_valid(result),
+        value is not None,
+        -value if value is not None else 0.0,
+    )
+
+
 def main() -> None:
     """Retry-until-valid orchestrator (r9 verdict #1: the driver's
     BENCH_r09 artifact of record was a storm-hit run with
@@ -433,7 +456,7 @@ def main() -> None:
     t0 = time.time()
     trail: list[dict] = []
     best: dict | None = None
-    best_key = (-1, -1, float("inf"))
+    best_key: tuple = ()
 
     for attempt in range(1, attempts_max + 1):
         # bounded pre-wait for a two-axis quiet window
@@ -483,25 +506,15 @@ def main() -> None:
             trail.append({"attempt": attempt, "rc": proc.returncode,
                           "error": "no JSON line"})
             continue
-        n_valid = sum(bool(v) for v in result.get("queries_valid", {}).values())
         trail.append({
             "attempt": attempt,
             "calibration_valid": result.get("calibration_valid"),
-            "queries_valid_count": n_valid,
+            "queries_valid_count": _n_queries_valid(result),
             "value": result.get("value"),
             "bandwidth_ratio_pre": result.get("bandwidth_ratio_pre"),
             "bandwidth_ratio_post": result.get("bandwidth_ratio_post"),
         })
-        # whole-run validity leads the key: a calibration_valid attempt
-        # must WIN the selection, not merely stop the loop (r11 fix — a
-        # valid attempt 2 lost to a faster invalid attempt 1 under the
-        # old (n_valid, -value) key, emitting the invalid run as the
-        # artifact of record)
-        key = (
-            1 if result.get("calibration_valid") else 0,
-            n_valid,
-            -(result.get("value") or float("inf")),
-        )
+        key = attempt_key(result)
         if best is None or key > best_key:
             best, best_key = result, key
         if result.get("calibration_valid"):

@@ -20,8 +20,13 @@ Architecture (Spark-first, not a port):
   machinery (mmap, rayon, binary heaps) is carried over.
 """
 
+from rust_diskann_spark import _zipguard
 from rust_diskann_spark.params import IndexParams
 from rust_diskann_spark.plans.index import DiskANNIndex, build_index, open_index
+
+# once per process: drivers, and every Spark worker that unpickles a
+# function referencing an engine module (see _zipguard)
+_zipguard.install()
 
 __all__ = ["IndexParams", "DiskANNIndex", "build_index", "open_index"]
 __version__ = "0.1.0"

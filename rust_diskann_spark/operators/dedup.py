@@ -28,8 +28,15 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from rust_diskann_spark import _zipguard
 from rust_diskann_spark.functions import text as TX
 from rust_diskann_spark.functions.distance import distance_expr
+
+# Every function below that ships to a worker starts with
+# ``_zipguard.install()``: cloudpickle ships these closures by value, so
+# without a reference to an engine module unpickling them would not import
+# the package, and the worker would keep paying pyspark's per-task
+# zipimport directory re-reads (see _zipguard).
 
 # LSH bucket pair generation is quadratic per bucket; buckets above this
 # size are split into positional blocks so the B^2/2 work of a hot bucket
@@ -79,6 +86,7 @@ def _blocked_bucket_pairs(
     )
 
     def split_blocks(batches):
+        _zipguard.install()
         for pdf in batches:
             rows: dict[str, list] = {
                 f"{c}_{s}": [] for s in ("a", "b") for c in payload
@@ -106,6 +114,7 @@ def _blocked_bucket_pairs(
     )
 
     def gen_pairs(batches):
+        _zipguard.install()
         empty_cols: dict[str, list] = {"doc_a": [], "doc_b": []}
         if with_simhash:
             empty_cols["hamming"] = []
@@ -209,6 +218,7 @@ def minhash_signatures(
     P = TX.HASH_P
 
     def fn(batches):
+        _zipguard.install()
         for pdf in batches:
             # pass 1: tokenize; intern shingles into a batch vocabulary.
             # Templated corpora repeat shingles heavily across docs, so
@@ -596,6 +606,7 @@ def simhash_signatures(
     pows = 1 << np.arange(BITS, dtype=np.int64)
 
     def fn(batches):
+        _zipguard.install()
         for pdf in batches:
             # batch token vocabulary: md5 + bit-expand once per UNIQUE
             # token (vocabularies repeat heavily across docs), then each
@@ -717,7 +728,6 @@ def embedding_near_duplicates(
     ~3 orders faster than evaluating the zip_with/aggregate cosine fold
     per pair. Exactness is untouched: float64 matmul + threshold.
     """
-    spark = emb.sparkSession
     base = emb.select(F.col(id_col).cast("long").alias("id"), F.col(vec_col).alias("v"))
     if n_blocks is None:
         n = base.count()
@@ -734,16 +744,21 @@ def embedding_near_duplicates(
 
     blocked = base.withColumn("b", F.pmod(F.xxhash64("id"), F.lit(n_blocks)).cast("int"))
 
-    # the (bi, bj) block-pair table is generated DISTRIBUTIVELY (range x
-    # range upper triangle), never as a driver-side python list: at
+    # the (bi, bj) block-pair table is generated DISTRIBUTIVELY (upper
+    # triangle of a self-join), never as a driver-side python list: at
     # n_blocks=4096 the triangle is ~8.4M rows — trivial for executors,
     # but a driver list + createDataFrame serialized it through the
-    # driver (r5 verdict item #4). Side A feeds every pair whose bi
-    # matches the row's block; side B the bj side (two independent pair
-    # tables keep the lineages unambiguous).
+    # driver (r5 verdict item #4). It spans only OCCUPIED block ids: a
+    # pair with an empty side emits nothing, but its cogroup key would
+    # still cost one Python call, and a sparse corpus over many blocks
+    # has tens of thousands of such keys. Side A feeds every pair whose
+    # bi matches the row's block; side B the bj side (two independent
+    # pair tables keep the lineages unambiguous).
+    occupied = blocked.select("b").distinct()
+
     def _pair_table() -> DataFrame:
-        bi = spark.range(n_blocks).select(F.col("id").cast("int").alias("bi"))
-        bj = spark.range(n_blocks).select(F.col("id").cast("int").alias("bj"))
+        bi = occupied.select(F.col("b").alias("bi"))
+        bj = occupied.select(F.col("b").alias("bj"))
         return bi.join(bj, F.col("bj") >= F.col("bi"))
 
     pairs_a = _pair_table()
@@ -760,6 +775,7 @@ def embedding_near_duplicates(
     )
 
     def block_sims(a_pdf: pd.DataFrame, b_pdf: pd.DataFrame) -> pd.DataFrame:
+        _zipguard.install()
         empty = pd.DataFrame({"id_a": [], "id_b": [], "cosine_sim": []}).astype(
             {"id_a": "int64", "id_b": "int64", "cosine_sim": "float64"}
         )
@@ -824,6 +840,7 @@ def embedding_near_duplicates_lsh(
 
     @F.pandas_udf(ArrayType(IntegerType()))
     def bucket_ids(v: pd.Series) -> pd.Series:
+        _zipguard.install()
         mat = np.stack(v.to_numpy())  # (batch, dim)
         bits = (mat @ planes.T) > 0  # (batch, tables*planes)
         b = bits.reshape(len(mat), n_tables, n_planes) @ pow2  # (batch, tables)

@@ -394,10 +394,13 @@ class DiskANNIndex:
         beam cost varies, and one-task-per-core partitioning turns that
         variance into a stage-tail straggler (measured at 1M: median
         task 0.63 s vs max 0.82 s per batch; 3x finer partitions
-        recovered ~20% steady QPS). Each Python task has a fixed floor
-        (110-250 ms measured on a 4-vCPU host, mostly pyspark's
-        per-task ``importlib.invalidate_caches()``), so a small batch
-        served by many partitions pays it many times.
+        recovered ~20% steady QPS). pyspark's per-task
+        ``importlib.invalidate_caches()`` cost 119-254 ms per Python task
+        on a 4-vCPU host before CPython 3.13; the package installs a
+        stat-guarded zipimporter (``_zipguard``) that cuts it to
+        0.06-0.16 ms after each worker's first engine task, so a
+        1-partition 64-query batch fanned out to 12 tasks takes about
+        350 ms rather than about 950 ms.
         """
         if mode not in ("auto", "broadcast", "scan", "cogroup"):
             raise ValueError(

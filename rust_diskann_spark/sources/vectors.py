@@ -18,6 +18,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import LongType, StructField, StructType
 
+from rust_diskann_spark import _zipguard
+
 
 def load_vectors(
     spark: SparkSession,
@@ -108,6 +110,7 @@ def with_dense_ids(
     out_cols = [f.name for f in out_schema.fields]
 
     def add_ids(batches):
+        _zipguard.install()  # shipped by value: see _zipguard
         # mapInPandas runs once per partition; batches arrive in partition
         # order, so a running local counter + the partition's offset give
         # the global dense id without any further exchange

@@ -42,9 +42,10 @@ BEAM = int(os.environ.get("RDS_BEAM", "128"))
 PROBES = os.environ.get("RDS_STREAM_PROBES") or None
 PROBES = int(PROBES) if PROBES and PROBES != "auto" else PROBES
 # RDS_STREAM_GROUP=1: serve each micro-batch through the piece-group
-# cached scan (search_with_dists(mode='scan', group_pieces=True)) —
-# one union-sub-graph search per probed cluster instead of one search
-# per cap-split piece. Requires a file-backed multi-shard index.
+# cached scan (search_with_dists(mode='scan', group_pieces=True)) — one
+# task per probed piece group running each member piece's own kernel
+# call, results identical to ungrouped serving with fewer task
+# dispatches. Requires a file-backed multi-shard index.
 GROUP = os.environ.get("RDS_STREAM_GROUP") == "1"
 CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
 K = 10
